@@ -4,8 +4,8 @@ Each layer is the set of spans whose name is the layer name or starts
 with it (``operators.raster`` covers ``operators.raster.polygons_to_raster``
 and ``operators.raster.clip_raster_to_polygon``). A span's executor totals
 are those of its own job group plus its descendants'. Per-pass values are
-reported as the median over the traced window's passes; set-up values
-come from the traced set-up.
+reported as the median over the traced passes; set-up values come from
+the traced set-up.
 """
 
 from __future__ import annotations

@@ -10,9 +10,10 @@ starts when the previous one has finished.
 
 --trace 0 sets up several times (median reported as setup_s, plus the
 untimed warm-up passes), runs passes for --seconds, checks the outputs
-outside the timers, and prints the end-to-end metrics. --trace 1 runs the
-same untraced window, then a traced one in a session that writes the
-Spark event log, and prints the per-layer metrics; per-span records go to
+outside the timers, and prints the end-to-end metrics. --trace 1 sets up once
+and checks the warm-up passes' outputs, then alternates traced and
+span-free passes in a session that writes the Spark event log, and
+prints the per-layer metrics; per-span records go to
 a side file whose path is printed on the line before the result.
 
 The last stdout line is one JSON object:
@@ -176,6 +177,23 @@ class Bench:
             passes.append(self.run_pass(ctx))
         return passes
 
+    def paired_window(self, traced_ctx, plain_ctx, seconds: float):
+        """Pairs of one traced and one span-free pass on one session until
+        ``seconds`` have passed, the order within a pair flipping each time
+        (ABBA), so both halves run with the same JIT state and host
+        conditions and a linear drift cancels. Returns (traced passes,
+        span-free passes)."""
+        traced, plain = [], []
+        t_end = time.perf_counter() + seconds
+        while not plain or time.perf_counter() < t_end:
+            if len(plain) % 2 == 0:
+                traced.append(self.run_pass(traced_ctx))
+                plain.append(self.run_pass(plain_ctx))
+            else:
+                plain.append(self.run_pass(plain_ctx))
+                traced.append(self.run_pass(traced_ctx))
+        return traced, plain
+
     def check(self, ctx) -> bool:
         """Output checks, outside every timer. A wrong output fails each
         execution of its op that had not already raised."""
@@ -216,13 +234,14 @@ def scaling_eff(b: Bench) -> dict[str, float]:
     """Flagship 1 -> cores scaling, each level in a fresh SparkContext,
     divided by the same ratio for the pure-JVM control."""
     from perfbench import host
+    from perfbench.workloads import SCALING_DOCS
 
     walls, ctrl = {}, {}
     for level in (1, b.cores):
         b.start_session(master_cores=level)
         ctx = b.ctx()
         t0 = time.perf_counter()
-        b.wl.frame(ctx, b.wl.scaling_docs).collect()
+        b.wl.frame(ctx, SCALING_DOCS).collect()
         walls[level] = time.perf_counter() - t0
         ctrl[level] = host.control_s(b.spark, 2 * level, reps=1)
     eff = walls[1] / walls[b.cores] / b.cores
@@ -274,23 +293,30 @@ def run_untraced(b: Bench, seconds: float) -> dict:
 
 
 def run_traced(b: Bench, seconds: float) -> dict:
+    """The untraced set-up and its warm-up passes, whose outputs are
+    checked; then a session with the event log on, warmed by one pass, in
+    which traced and span-free passes alternate for twice ``seconds``.
+    trace.overhead_s is the difference of the two halves' median walls:
+    the cost of the spans and their job groups. The event log is on in
+    both halves, so its own cost, paid on the listener bus's thread, is
+    not in it."""
     from perfbench import eventlog, host, layers
     from perfbench.trace import Tracer
 
     load_start = host.loadavg()
     b.setup(1, b.wl.warmup_passes)
-    ctx = b.ctx_cur
-    untraced = b.window(ctx, seconds)
-    correct = b.check(ctx)
+    correct = b.check(b.ctx_cur)
+    log("checks done")
     if b.wl.name == "flagship_tag":
         for k, v in scaling_eff(b).items():
             print_metric(b.wl.name, k, v, "ratio")
-    # the JVM is warm by now: one pass warms the traced session
+        log("scaling run done")
     b.setup(1, 1, tracer_factory=Tracer, eventlog=True)
     ctx = b.ctx_cur
     ticks = host.cpu_ticks()
-    traced = b.window(ctx, seconds)
+    traced, untraced = b.paired_window(ctx, b.ctx(), 2 * seconds)
     steal = host.steal_frac(ticks, host.cpu_ticks())
+    log(f"traced window: {len(traced)} + {len(untraced)} passes")
     hostinfo = {
         "control_s": host.control_s(b.spark, b.cores),
         "control_1part_s": host.control_s(b.spark, 1),

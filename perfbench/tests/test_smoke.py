@@ -13,22 +13,17 @@ import pytest
 from perfbench import layers, run
 from perfbench.eventlog import log_files, read_events, summarize
 from perfbench.trace import Tracer
-from perfbench.workloads import (
-    WORKLOADS, Composite, FlagshipTag, HydroFixpoint, PolygonPython, TileExport,
-)
+from perfbench.workloads import WORKLOADS, FlagshipTag, HydroPolygonExport
 
 HOST = {"control_s": 1.0, "control_1part_s": 3.0, "loadavg_start": 0.5, "steal_frac": 0.0}
 
 
 def tiny_workloads():
     return [
-        FlagshipTag(n_docs=20_000, scaling_docs=5_000),
-        Composite("hydro_polygon_export", (
-            HydroFixpoint(n_docs=500, queries=("watershed",)),
-            # 4 x 71 ring vertices: above EXPR_MAX_VERTICES, so the Arrow path
-            PolygonPython(grid=125, n_polys=4, n_vertices=70, n_docs=2000),
-            TileExport(n_docs=5000),
-        )),
+        FlagshipTag(n_docs=20_000),
+        # 4 x 71 ring vertices: above EXPR_MAX_VERTICES, so the Arrow path
+        HydroPolygonExport(hydro_docs=500, grid=125, n_polys=4, n_vertices=70,
+                           pip_docs=2000, export_docs=5000),
     ]
 
 
@@ -44,9 +39,9 @@ def test_tiny_workload_passes_checks_and_reports_layers(wl, work):
     b = run.Bench(wl, seed=7, work=work)
     try:
         b.setup(1, 1, tracer_factory=Tracer, eventlog=True)
-        passes = b.window(b.ctx_cur, 0.0)
+        traced, plain = b.paired_window(b.ctx_cur, b.ctx(), 0.0)
         assert b.check(b.ctx_cur)
-        assert b.failed == 0 and b.attempted == 2 * len(wl.ops)
+        assert b.failed == 0 and b.attempted == 3 * len(wl.ops)
         app = b.spark.sparkContext.applicationId
         b.spark.stop()
         b.spark = None
@@ -54,11 +49,13 @@ def test_tiny_workload_passes_checks_and_reports_layers(wl, work):
         if b.spark is not None:
             b.spark.stop()
     groups = summarize(read_events(log_files(b.eventlog_dir, app)))
-    metrics, records = layers.per_layer(b.ctx_cur.tracer.spans, groups, passes, passes, HOST, b.cores)
+    metrics, records = layers.per_layer(b.ctx_cur.tracer.spans, groups, traced, plain, HOST, b.cores)
     v = {k: val for k, (val, _) in metrics.items()}
     assert set(v) == set(layers.PER_LAYER)
     assert v["spark.jobs"] > 0 and v["session.start_s"] > 0
-    assert v["trace.overhead_s"] == 0.0
+    assert v["trace.overhead_s"] == traced[0]["wall"] - plain[0]["wall"]
+    # the span-free pass left no spans: one traced pass, one warm-up pass
+    assert [r["name"] for r in records].count("pass") == 2
     assert v["host.control_scaling_eff"] == pytest.approx(3.0 / b.cores)
     assert {r["name"] for r in records} >= {"session.start", "setup.prepare", "pass"}
     python = [k for k in v if "python" in k]

@@ -1,5 +1,6 @@
 """Span arithmetic: union length, self time, driver idle, layer selection."""
 
+from perfbench import run
 from perfbench.eventlog import GroupStats
 from perfbench.layers import SpanTree
 from perfbench.trace import Span, Tracer, idle_s, self_times, union_length
@@ -68,3 +69,14 @@ def test_task_skew_uses_the_dominant_stage():
     g = GroupStats(stage_task_ms={1: [10, 10, 40], 2: [1, 1, 1, 1], 3: [500]})
     assert g.task_skew() == 4.0  # stage 3 has one task: no skew signal
     assert GroupStats().task_skew() == 1.0
+
+
+def test_paired_window_flips_the_order_within_each_pair(monkeypatch):
+    clock = iter(range(100))
+    monkeypatch.setattr(run.time, "perf_counter", lambda: next(clock))
+    b = run.Bench.__new__(run.Bench)  # no session: passes are recorded only
+    order = []
+    b.run_pass = lambda ctx: order.append(ctx) or {"ctx": ctx}
+    traced, plain = b.paired_window("T", "U", 4)
+    assert "".join(order) == "TUUTTUUT"
+    assert [p["ctx"] for p in traced] == ["T"] * 4 and [p["ctx"] for p in plain] == ["U"] * 4

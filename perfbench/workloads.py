@@ -8,6 +8,11 @@ tracer the spans cost nothing.
 
 Sizes are dataclass fields so the smoke tests can run every workload at a
 tiny size through the same code.
+
+The hydrology fixpoint, the polygon Python lanes and the tile export run
+as one workload, hydro_polygon_export: every benchmark run pays a JVM
+start and a cold first pass, so each extra workload costs minutes of
+set-up in a full measurement.
 """
 
 from __future__ import annotations
@@ -107,6 +112,9 @@ class Workload:
 
 # ----------------------------------------------------------- flagship_tag
 
+# docs per run of the 1 -> cores scaling measurement (``run.scaling_eff``)
+SCALING_DOCS = 1_000_000
+
 
 @dataclass
 class FlagshipTag(Workload):
@@ -115,7 +123,6 @@ class FlagshipTag(Workload):
     per-(tile, poly) aggregate. No Python worker is involved."""
 
     n_docs: int = 4_000_000
-    scaling_docs: int = 1_000_000
     name = "flagship_tag"
     ops = ("flagship",)
     warmup_passes = 3  # short passes: the generated code keeps speeding up
@@ -188,7 +195,7 @@ class FlagshipTag(Workload):
         return {"docs": (self.n_docs, op_walls["flagship"])}
 
 
-# --------------------------------------------------------- hydro_fixpoint
+# ------------------------------------------------- hydro_polygon_export
 
 
 def write_documents(path: str, doc_ids: np.ndarray) -> None:
@@ -219,66 +226,6 @@ def hydro_doc_ids(seed: int, n: int) -> np.ndarray:
     return np.sort(rng.choice(2**31, size=n, replace=False)).astype(np.int64)
 
 
-@dataclass
-class HydroFixpoint(Workload):
-    """Iterative hydrology catalog queries over a 5,000-row documents table
-    (a 20x20 DEM): the wall is driver loop glue and per-job overhead."""
-
-    n_docs: int = 5000
-    queries: tuple[str, ...] = ("watershed",)
-    name = "hydro_fixpoint"
-    rows: dict = field(default_factory=dict)
-    sf_dir: str = ""
-
-    @property
-    def ops(self):
-        return self.queries
-
-    def prepare(self, ctx: Ctx) -> None:
-        from whitebox_tools_spark import catalog_cache
-
-        self.sf_dir = os.path.join(ctx.work, f"hydro_seed{ctx.seed}")
-        os.makedirs(self.sf_dir, exist_ok=True)
-        write_documents(os.path.join(self.sf_dir, "documents.parquet"),
-                        hydro_doc_ids(ctx.seed, self.n_docs))
-        # the one shared key watershed reads
-        with ctx.span("catalog_cache.build"):
-            catalog_cache.z_last(ctx.spark, self.sf_dir)
-
-    def run_op(self, ctx: Ctx, op: str) -> None:
-        from whitebox_tools_spark import api
-
-        with ctx.span("operators.iter", query=op):
-            df = api.QUERIES[op](ctx.spark, self.sf_dir)
-            self.rows[op] = (df.columns, [tuple(r) for r in df.collect()])
-
-    def check(self, ctx: Ctx) -> dict[str, str | None]:
-        import duckdb
-
-        from whitebox_tools_spark import api
-
-        out = {}
-        con = duckdb.connect()
-        try:
-            con.execute(
-                "CREATE VIEW documents AS SELECT * FROM read_parquet("
-                f"'{os.path.join(self.sf_dir, 'documents.parquet')}')"
-            )
-            for q in self.queries:
-                res = con.execute(api.ORACLE_SQL[q])
-                dcols = [d[0] for d in res.description]
-                scols, srows = self.rows[q]
-                drows = res.fetchall()
-                ok = same_rows(scols, srows, dcols, drows)
-                out[q] = None if ok else f"mismatch {len(srows)} rows vs oracle {len(drows)}"
-        finally:
-            con.close()
-        return out
-
-
-# --------------------------------------------------------- polygon_python
-
-
 def star_layer(seed: int, n_polys: int, n_vertices: int):
     """Hole-free star polygons (clockwise shells) over [0, 1000)^2."""
     from whitebox_tools_spark.sources.vectors import PolygonFeature
@@ -296,105 +243,6 @@ def star_layer(seed: int, n_polys: int, n_vertices: int):
         layer.append(PolygonFeature(fid=fid, rings=[ring], holes=[False], attrs={"zone": fid}))
     return layer
 
-
-@dataclass
-class PolygonPython(Workload):
-    """The Python-worker lanes against a 10^4-vertex layer: paint,
-    raster clip, and Arrow point-in-polygon over docs carrying spans."""
-
-    grid: int = 250  # cells per side; 1000/grid must be exact in binary
-    n_polys: int = 100
-    n_vertices: int = 100
-    n_docs: int = 20_000
-    name = "polygon_python"
-    ops = ("paint", "clip", "pip")
-    layer: list = field(default_factory=list)
-
-    def cfg(self):
-        from whitebox_tools_spark.operators.gridding import GridConfig
-
-        res = 1000.0 / self.grid
-        return GridConfig(rows=self.grid, cols=self.grid, north=1000.0, west=0.0,
-                          res_x=res, res_y=res)
-
-    def prepare(self, ctx: Ctx) -> None:
-        self.layer = star_layer(ctx.seed, self.n_polys, self.n_vertices)
-
-    def grid_raster(self, ctx: Ctx) -> DataFrame:
-        from whitebox_tools_spark.operators.gridding import cell_centers
-
-        return cell_centers(ctx.spark, self.cfg()).select(
-            "row", "col", F.col("cell").cast("double").alias("value")
-        )
-
-    def docs(self, ctx: Ctx) -> DataFrame:
-        return synth_docs(ctx.spark, seeded_base(ctx.seed, self.n_docs), self.n_docs,
-                          ctx.cores * 2)
-
-    def painted(self, ctx):
-        from whitebox_tools_spark.operators import raster
-
-        return raster.polygons_to_raster(ctx.spark, self.layer, self.cfg())
-
-    def clipped(self, ctx):
-        from whitebox_tools_spark.operators import raster
-
-        return raster.clip_raster_to_polygon(self.grid_raster(ctx), self.layer, self.cfg())
-
-    def tagged(self, ctx):
-        from whitebox_tools_spark import derive
-        from whitebox_tools_spark.operators import pip
-
-        return pip.tag_polygon(derive.with_geometry(self.docs(ctx), "doc_num"), self.layer)
-
-    def run_op(self, ctx: Ctx, op: str) -> None:
-        if op == "paint":
-            with ctx.span("operators.raster.polygons_to_raster"):
-                noop_write(self.painted(ctx))
-        elif op == "clip":
-            with ctx.span("operators.raster.clip_raster_to_polygon"):
-                noop_write(self.clipped(ctx))
-        else:
-            with ctx.span("operators.pip.tag_polygon"):
-                noop_write(self.tagged(ctx))
-
-    def check(self, ctx: Ctx) -> dict[str, str | None]:
-        from whitebox_tools_spark.operators import pip
-        from whitebox_tools_spark.operators.gridding import cell_centers
-        from whitebox_tools_spark.sources.docs import check_span_equality
-
-        # last-wins fid of each cell centre through the equi-join path
-        ref = sorted(
-            tuple(r)
-            for r in pip.tag_polygon(
-                cell_centers(ctx.spark, self.cfg()), self.layer, strategy="cells"
-            )
-            .where(F.col("poly_fid").isNotNull())
-            .select("row", "col", F.col("poly_fid").cast("double"))
-            .collect()
-        )
-        painted = sorted(tuple(r) for r in self.painted(ctx).collect())
-        clipped = sorted(tuple(r) for r in self.clipped(ctx).select("row", "col").collect())
-        out = {
-            "paint": None if painted == ref and ref else f"{len(painted)} cells vs {len(ref)}",
-            "clip": None if clipped == [r[:2] for r in ref] else f"{len(clipped)} cells kept",
-        }
-        tagged = self.tagged(ctx).localCheckpoint()
-        n_out = tagged.count()
-        bad = check_span_equality(self.docs(ctx), tagged)
-        ok = bad == 0 and n_out == self.n_docs
-        out["pip"] = None if ok else f"{bad} span violations, {n_out} of {self.n_docs} rows"
-        return out
-
-    def work(self, op_walls):
-        return {
-            "docs": (self.n_docs, op_walls["pip"]),
-            "cells": (2 * self.grid * self.grid, op_walls["paint"] + op_walls["clip"]),
-        }
-
-
-# ------------------------------------------------------------ tile_export
-
 # the derived coordinate domain, known up front: lidar_tile skips the scan
 KNOWN_EXTENT = (0.0, 1000.0, 0.0, 1000.0)
 
@@ -405,20 +253,79 @@ def dir_bytes(path: str) -> int:
     )
 
 
+
+
 @dataclass
-class TileExport(Workload):
-    """Tiling and PIP used for writes: a one-stage checkpoint.Pipeline,
-    its resume, one LAS per tile and the LAS read-back."""
+class HydroPolygonExport(Workload):
+    """One pass over three lanes that the Spark driver, the Python workers
+    and the writes dominate:
 
-    n_docs: int = 40_000
-    name = "tile_export"
-    ops = ("stage", "resume", "las_write", "las_read")
+    - ``watershed``, an iterative hydrology query over a 5,000-row
+      documents table (a 20x20 DEM): driver loop glue and per-job overhead;
+    - the Python-worker lanes against a 10^4-vertex star layer: paint,
+      raster clip, and Arrow point-in-polygon over docs carrying spans;
+    - tiling and PIP used for writes: a one-stage checkpoint.Pipeline, its
+      resume, one LAS per tile and the LAS read-back.
+    """
+
+    hydro_docs: int = 5000
+    grid: int = 250  # cells per side; 1000/grid must be exact in binary
+    n_polys: int = 100
+    n_vertices: int = 100
+    pip_docs: int = 20_000
+    export_docs: int = 40_000
+    name = "hydro_polygon_export"
+    ops = ("watershed", "paint", "clip", "pip", "stage", "resume", "las_write", "las_read")
+    sf_dir: str = ""
+    layer: list = field(default_factory=list)
+    rows: tuple = ()  # watershed's (columns, rows)
     run_no: int = 0
-    state: dict = field(default_factory=dict)
+    state: dict = field(default_factory=dict)  # the export pass's outputs
 
-    def docs(self, ctx: Ctx) -> DataFrame:
-        return synth_docs(ctx.spark, seeded_base(ctx.seed, self.n_docs), self.n_docs,
-                          ctx.cores * 2)
+    def prepare(self, ctx: Ctx) -> None:
+        from whitebox_tools_spark import catalog_cache
+
+        self.sf_dir = os.path.join(ctx.work, f"hydro_seed{ctx.seed}")
+        os.makedirs(self.sf_dir, exist_ok=True)
+        write_documents(os.path.join(self.sf_dir, "documents.parquet"),
+                        hydro_doc_ids(ctx.seed, self.hydro_docs))
+        # the one shared key watershed reads
+        with ctx.span("catalog_cache.build"):
+            catalog_cache.z_last(ctx.spark, self.sf_dir)
+        self.layer = star_layer(ctx.seed, self.n_polys, self.n_vertices)
+
+    # ------------------------------------------------------------ frames
+
+    def cfg(self):
+        from whitebox_tools_spark.operators.gridding import GridConfig
+
+        res = 1000.0 / self.grid
+        return GridConfig(rows=self.grid, cols=self.grid, north=1000.0, west=0.0,
+                          res_x=res, res_y=res)
+
+    def docs(self, ctx: Ctx, n: int) -> DataFrame:
+        return synth_docs(ctx.spark, seeded_base(ctx.seed, n), n, ctx.cores * 2)
+
+    def painted(self, ctx):
+        from whitebox_tools_spark.operators import raster
+
+        return raster.polygons_to_raster(ctx.spark, self.layer, self.cfg())
+
+    def clipped(self, ctx):
+        from whitebox_tools_spark.operators import raster
+        from whitebox_tools_spark.operators.gridding import cell_centers
+
+        grid = cell_centers(ctx.spark, self.cfg()).select(
+            "row", "col", F.col("cell").cast("double").alias("value")
+        )
+        return raster.clip_raster_to_polygon(grid, self.layer, self.cfg())
+
+    def tagged(self, ctx):
+        from whitebox_tools_spark import derive
+        from whitebox_tools_spark.operators import pip
+
+        docs = derive.with_geometry(self.docs(ctx, self.pip_docs), "doc_num")
+        return pip.tag_polygon(docs, self.layer)
 
     def pipeline(self, ctx: Ctx, root: str):
         from whitebox_tools_spark import checkpoint, derive
@@ -426,18 +333,34 @@ class TileExport(Workload):
         from whitebox_tools_spark.sources import vectors
 
         def tag(spark, inputs):
-            geo = derive.with_geometry(self.docs(ctx), "doc_num")
+            geo = derive.with_geometry(self.docs(ctx, self.export_docs), "doc_num")
             tiled = tiling.lidar_tile(geo, min_points=2, extent=KNOWN_EXTENT)
             return pip.tag_polygon(tiled, vectors.rect_layer())
 
         return checkpoint.Pipeline(root, [checkpoint.Stage("tag", tag, key_cols=["tile"])])
 
+    # --------------------------------------------------------------- ops
+
     def run_op(self, ctx: Ctx, op: str) -> None:
+        from whitebox_tools_spark import api
         from whitebox_tools_spark.io import las
 
         st = self.state
-        source = f"docs-{seeded_base(ctx.seed, self.n_docs)}-{self.n_docs}"
-        if op == "stage":
+        source = f"docs-{seeded_base(ctx.seed, self.export_docs)}-{self.export_docs}"
+        if op == "watershed":
+            with ctx.span("operators.iter", query=op):
+                df = api.QUERIES[op](ctx.spark, self.sf_dir)
+                self.rows = (df.columns, [tuple(r) for r in df.collect()])
+        elif op == "paint":
+            with ctx.span("operators.raster.polygons_to_raster"):
+                noop_write(self.painted(ctx))
+        elif op == "clip":
+            with ctx.span("operators.raster.clip_raster_to_polygon"):
+                noop_write(self.clipped(ctx))
+        elif op == "pip":
+            with ctx.span("operators.pip.tag_polygon"):
+                noop_write(self.tagged(ctx))
+        elif op == "stage":
             # a fresh root per pass, so the stage always executes; the work
             # directory (all roots) is removed when the run ends
             self.run_no += 1
@@ -460,12 +383,70 @@ class TileExport(Workload):
                     for r in las.read_las(ctx.spark, st["las_dir"]).groupBy("path").count().collect()
                 }
 
+    # ------------------------------------------------------------ checks
+
     def check(self, ctx: Ctx) -> dict[str, str | None]:
+        return {**self.check_watershed(), **self.check_polygons(ctx), **self.check_export(ctx)}
+
+    def check_watershed(self) -> dict[str, str | None]:
+        """Against ``api.ORACLE_SQL`` in DuckDB, with the gate's comparison."""
+        import duckdb
+
+        from whitebox_tools_spark import api
+
+        con = duckdb.connect()
+        try:
+            con.execute(
+                "CREATE VIEW documents AS SELECT * FROM read_parquet("
+                f"'{os.path.join(self.sf_dir, 'documents.parquet')}')"
+            )
+            res = con.execute(api.ORACLE_SQL["watershed"])
+            dcols = [d[0] for d in res.description]
+            drows = res.fetchall()
+        finally:
+            con.close()
+        scols, srows = self.rows
+        ok = same_rows(scols, srows, dcols, drows)
+        return {"watershed": None if ok else f"mismatch {len(srows)} rows vs oracle {len(drows)}"}
+
+    def check_polygons(self, ctx: Ctx) -> dict[str, str | None]:
+        """Paint and clip against last-wins ``tag_polygon(strategy="cells")``
+        on the cell centres (the equi-join path, no Python); Arrow PIP keeps
+        every row and every span."""
+        from whitebox_tools_spark.operators import pip
+        from whitebox_tools_spark.operators.gridding import cell_centers
+        from whitebox_tools_spark.sources.docs import check_span_equality
+
+        ref = sorted(
+            tuple(r)
+            for r in pip.tag_polygon(
+                cell_centers(ctx.spark, self.cfg()), self.layer, strategy="cells"
+            )
+            .where(F.col("poly_fid").isNotNull())
+            .select("row", "col", F.col("poly_fid").cast("double"))
+            .collect()
+        )
+        painted = sorted(tuple(r) for r in self.painted(ctx).collect())
+        clipped = sorted(tuple(r) for r in self.clipped(ctx).select("row", "col").collect())
+        out = {
+            "paint": None if painted == ref and ref else f"{len(painted)} cells vs {len(ref)}",
+            "clip": None if clipped == [r[:2] for r in ref] else f"{len(clipped)} cells kept",
+        }
+        tagged = self.tagged(ctx).localCheckpoint()
+        n_out = tagged.count()
+        bad = check_span_equality(self.docs(ctx, self.pip_docs), tagged)
+        ok = bad == 0 and n_out == self.pip_docs
+        out["pip"] = None if ok else f"{bad} span violations, {n_out} of {self.pip_docs} rows"
+        return out
+
+    def check_export(self, ctx: Ctx) -> dict[str, str | None]:
+        """The stage ran and kept every span, the resume executed nothing,
+        and LAS read-back rows per tile equal the stage's tile counts."""
         from whitebox_tools_spark.sources.docs import check_span_equality
 
         st = self.state
         out = {}
-        bad = check_span_equality(self.docs(ctx), st["out"])
+        bad = check_span_equality(self.docs(ctx, self.export_docs), st["out"])
         n_out = st["out"].count()
         ok = st["executed"] == ["tag"] and bad == 0 and n_out > 0
         out["stage"] = None if ok else f"executed {st['executed']}, {bad} span violations"
@@ -478,8 +459,14 @@ class TileExport(Workload):
         out["las_read"] = None if got == want else f"per-tile rows {got} vs stage {want}"
         return out
 
+    # -------------------------------------------------------------- work
+
     def work(self, op_walls):
-        return {"docs": (self.n_docs, op_walls["stage"] + op_walls["las_write"])}
+        return {
+            "docs": (self.pip_docs + self.export_docs,
+                     op_walls["pip"] + op_walls["stage"] + op_walls["las_write"]),
+            "cells": (2 * self.grid * self.grid, op_walls["paint"] + op_walls["clip"]),
+        }
 
     def pass_counts(self) -> dict[str, int]:
         st = self.state
@@ -489,52 +476,7 @@ class TileExport(Workload):
         }
 
 
-# --------------------------------------------------------------- composite
-
-
-@dataclass
-class Composite(Workload):
-    """Several workloads' ops run back to back as one pass."""
-
-    name: str = ""
-    parts: tuple = ()
-
-    @property
-    def ops(self):
-        return tuple(op for p in self.parts for op in p.ops)
-
-    def part(self, op: str) -> Workload:
-        return next(p for p in self.parts if op in p.ops)
-
-    def prepare(self, ctx: Ctx) -> None:
-        for p in self.parts:
-            p.prepare(ctx)
-
-    def run_op(self, ctx: Ctx, op: str) -> None:
-        self.part(op).run_op(ctx, op)
-
-    def check(self, ctx: Ctx) -> dict[str, str | None]:
-        return {op: v for p in self.parts for op, v in p.check(ctx).items()}
-
-    def pass_counts(self) -> dict[str, int]:
-        return {k: v for p in self.parts for k, v in p.pass_counts().items()}
-
-    def work(self, op_walls):
-        total: dict[str, tuple[int, float]] = {}
-        for p in self.parts:
-            for unit, (n, s) in p.work(op_walls).items():
-                n0, s0 = total.get(unit, (0, 0.0))
-                total[unit] = (n0 + n, s0 + s)
-        return total
-
-
-def hydro_polygon_export() -> Composite:
-    """The iterative hydrology queries, the polygon Python lanes and the
-    tile export, in one pass."""
-    return Composite("hydro_polygon_export", (HydroFixpoint(), PolygonPython(), TileExport()))
-
-
 WORKLOADS = {
     "flagship_tag": FlagshipTag,
-    "hydro_polygon_export": hydro_polygon_export,
+    "hydro_polygon_export": HydroPolygonExport,
 }
