@@ -6,7 +6,9 @@ thread pool over one Spark session (Spark schedules concurrent jobs
 fine; each worker gets its own DuckDB connection).
 
 Usage: python scripts/verify_contract.py [sf_dir] [threads] [name_filter]
-Prints one line per query and a final "BAD: [...]" summary.
+Prints one line per query and a final "BAD: [...]" summary. The session
+comes from ``session.get_spark``: local[SPARK_GRAFT_CPUS, else nproc],
+driver heap from SPARK_GRAFT_DRIVER_MEM.
 """
 
 from __future__ import annotations
@@ -21,7 +23,7 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as m  # noqa: E402
-from pyspark.sql import SparkSession
+from whitebox_tools_spark.session import get_spark  # noqa: E402
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 THREADS = int(sys.argv[2]) if len(sys.argv) > 2 else 4
@@ -41,13 +43,9 @@ def canon(v):
 
 
 def main():
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.driver.memory", "6g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    # sized to the host the way the engine is: SPARK_GRAFT_CPUS, else nproc
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    spark = get_spark(cores=cores, app="verify_contract")
     spark.sparkContext.setLogLevel("ERROR")
     print("entry rows:", len(m.entry(spark).collect()), flush=True)
 

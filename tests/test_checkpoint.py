@@ -99,7 +99,7 @@ class TestCheckpointNostats:
         checkpoint_nostats must keep the estimate bounded."""
         from pyspark.sql import functions as F
 
-        from whitebox_tools_spark.operators.graph import checkpoint_nostats
+        from whitebox_tools_spark.operators.fixpoint import checkpoint_nostats
 
         df = checkpoint_nostats(
             spark.range(100).select(F.col("id").alias("node"), F.col("id").alias("comp"))

@@ -11,7 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from whitebox_tools_spark.operators.graph import checkpoint_nostats, size_hint
+from whitebox_tools_spark.operators.fixpoint import fixpoint, unchanged
+from whitebox_tools_spark.operators.graph import size_hint
 from whitebox_tools_spark.operators.gridding import GridConfig
 
 # sector -> (n1 offset, n2 offset) as (drow, dcol), clockwise from north
@@ -99,19 +100,7 @@ def dinf_flow_accumulation(
         )
 
     cur = cells.select("id", F.lit(1.0).alias("val")).localCheckpoint(eager=True)
-    batch = 2  # two lazy rounds per checkpoint + convergence check
-    for _ in range(max(1, (max_rounds + batch - 1) // batch)):
-        nxt = cur
-        for _ in range(batch):
-            nxt = step(nxt)
-        nxt = nxt.transform(checkpoint_nostats)
-        changed = (
-            nxt.alias("n").join(cur.alias("o"), "id")
-            .where(F.col("n.val") != F.col("o.val")).limit(1).count()
-        )
-        cur = nxt
-        if changed == 0:
-            break
+    cur = fixpoint("dinf_flow_accumulation", cur, step, unchanged("id", "val"), max_rounds)
     return cells.join(cur, "id").select("row", "col", F.col("val").alias("value"))
 
 
@@ -198,17 +187,5 @@ def dinf_mass_flux(
 
     cur = base.select("id", ((F.col("l") - F.col("ab")) * F.col("e")).alias("val"))
     cur = cur.localCheckpoint(eager=True)
-    batch = 2
-    for _ in range(max(1, (max_rounds + batch - 1) // batch)):
-        nxt = cur
-        for _ in range(batch):
-            nxt = step(nxt)
-        nxt = nxt.transform(checkpoint_nostats)
-        changed = (
-            nxt.alias("n").join(cur.alias("o"), "id")
-            .where(F.col("n.val") != F.col("o.val")).limit(1).count()
-        )
-        cur = nxt
-        if changed == 0:
-            break
+    cur = fixpoint("dinf_mass_flux", cur, step, unchanged("id", "val"), max_rounds)
     return base.join(cur, "id").select("row", "col", F.col("val").alias("value"))

@@ -4,15 +4,17 @@
 connected_components: hash-to-min label propagation with pointer jumping
 (label-of-label shortcutting), so convergence is O(log diameter) driver
 rounds instead of O(diameter) — each round is two shuffles
-(neighbour-min + jump), localCheckpoint'ed to keep lineage flat. This is
-the standard large-scale CC recipe (two-phase hash-to-min) expressed as
-plain DataFrame joins.
+(neighbour-min + jump), run on the fixpoint driver (operators/fixpoint.py).
+This is the standard large-scale CC recipe (two-phase hash-to-min)
+expressed as plain DataFrame joins.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from whitebox_tools_spark.operators.fixpoint import fixpoint, unchanged
 
 
 def connected_components(
@@ -72,46 +74,9 @@ def connected_components(
             )
         )
 
-    # two propagate+jump rounds per checkpoint/convergence-check: halves
-    # the driver-side action count (a converged extra round is idempotent)
-    batch = 2
-    for _ in range(max(1, (max_rounds + batch - 1) // batch)):
-        jumped = labels
-        for _ in range(batch):
-            jumped = step(jumped)
-        jumped = checkpoint_nostats(jumped)
-        changed = (
-            jumped.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.comp") != F.col("o.comp"))
-            .limit(1)
-            .count()
-        )
-        labels = jumped
-        if changed == 0:
-            break
-    return labels
-
-
-def checkpoint_nostats(df: DataFrame) -> DataFrame:
-    """localCheckpoint that DROPS inherited size statistics.
-
-    Dataset.localCheckpoint preserves the child plan's sizeInBytes
-    estimate, and a pointer-jumping round self-joins the evolving frame —
-    the join estimate is the PRODUCT of both sides, so the inherited
-    statistic SQUARES every round. Its bit-length doubles per round; by
-    ~16 rounds Catalyst's stats arithmetic is multiplying million-bit
-    BigIntegers on the driver and each round takes exponentially longer
-    (observed: 0.5 s -> 27 s per batch on a 500-node graph). Rebuilding
-    the frame over the checkpointed InternalRow RDD resets the estimate
-    to the session default; explicit size_hint broadcasts (not AQE
-    stats) drive the join strategy inside these loops anyway."""
-    ck = df.localCheckpoint(eager=True)
-    jdf = ck._jdf
-    spark = df.sparkSession
-    rdd = jdf.queryExecution().toRdd()
-    new_jdf = spark._jsparkSession.internalCreateDataFrame(rdd, jdf.schema(), False)
-    return DataFrame(new_jdf, spark)
+    return fixpoint(
+        "connected_components", labels, step, unchanged("node", "comp"), max_rounds
+    )
 
 
 def size_hint(df: DataFrame, small: bool) -> DataFrame:

@@ -26,7 +26,7 @@ Parity contracts:
   strictly height-decreasing => DAG; accum(c) = #cells whose flow path
   passes through c (incl. itself). Spark: frontier iteration
   acc_{t+1} = 1 + sum(upstream acc_t), converging in longest-flow-path
-  rounds (bounded, localCheckpoint'ed); at cluster scale this is the
+  rounds (bounded, on operators/fixpoint.py); at cluster scale this is the
   standard aggregate-messages loop.
 """
 
@@ -41,12 +41,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from whitebox_tools_spark.operators.gridding import GridConfig, _warn_nonconverged
-from whitebox_tools_spark.operators.graph import (
-    checkpoint_nostats,
-    connected_components,
-    size_hint,
-)
+from whitebox_tools_spark.operators.fixpoint import fixpoint, none_left, unchanged
+from whitebox_tools_spark.operators.graph import connected_components, size_hint
+from whitebox_tools_spark.operators.gridding import GridConfig
 
 # neighbour order shared by the D8 family (d8_pointer.rs:235-236)
 D8_DX = (1, 1, 1, 0, -1, -1, -1, 0)
@@ -310,27 +307,10 @@ def d8_flow_accumulation(
             .select("id", (F.lit(1.0) + F.coalesce(F.col("inflow"), F.lit(0.0))).alias("acc"))
         )
 
-    acc = nodes.select("id", F.lit(1.0).alias("acc"))
-    batch = 2  # two lazy rounds per checkpoint + convergence check
-    converged = False
-    for _ in range(max(1, (max_rounds + batch - 1) // batch)):
-        new_acc = acc
-        for _ in range(batch):
-            new_acc = _step(new_acc)
-        new_acc = new_acc.transform(checkpoint_nostats)
-        changed = (
-            new_acc.alias("n")
-            .join(acc.alias("o"), "id")
-            .where(F.col("n.acc") != F.col("o.acc"))
-            .limit(1)
-            .count()
-        )
-        acc = new_acc
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        _warn_nonconverged("d8_flow_accumulation", max_rounds)
+    acc = fixpoint(
+        "d8_flow_accumulation", nodes.select("id", F.lit(1.0).alias("acc")), _step,
+        unchanged("id", "acc"), max_rounds,
+    )
     return nodes.join(acc, "id").select("row", "col", F.col("acc").alias("value"))
 
 
@@ -348,7 +328,7 @@ def watershed(
 
     ``pour_points``: (row, col, value=id). Distributed via pointer
     doubling over the flow function — label(c) resolves in O(log path)
-    rounds; each round is two hash joins on cell ids (localCheckpoint'ed).
+    rounds; each round is two hash joins on cell ids (operators/fixpoint.py).
     """
     from whitebox_tools_spark.operators.focal import focal_apply
 
@@ -405,22 +385,10 @@ def watershed(
             ).alias("ptr"),
         )
 
-    batch = 2  # two lazy pointer jumps per checkpoint + check
-    converged = False
-    for _ in range(max(1, (max_rounds + batch - 1) // batch)):
-        new_state = state
-        for _ in range(batch):
-            new_state = _jump(new_state)
-        new_state = new_state.transform(checkpoint_nostats)
-        remaining = new_state.where(
-            F.col("label").isNull() & F.col("ptr").isNotNull()
-        ).limit(1).count()
-        state = new_state
-        if remaining == 0:
-            converged = True
-            break
-    if not converged:
-        _warn_nonconverged("watershed", max_rounds)
+    # stop at the first batch with no unresolved row, not on a value
+    # compare: one scan of the new state instead of a join with the old
+    unresolved = F.col("label").isNull() & F.col("ptr").isNotNull()
+    state = fixpoint("watershed", state, _jump, none_left(unresolved), max_rounds)
     return state.where(F.col("label").isNotNull()).select(
         "row", "col", F.col("label").alias("value")
     )

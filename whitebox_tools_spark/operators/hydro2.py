@@ -27,13 +27,11 @@ from pyspark.sql import functions as F
 import numpy as np
 
 from whitebox_tools_spark.operators.focal import focal_apply
-from whitebox_tools_spark.operators.graph import (
-    checkpoint_nostats,
-    connected_components,
-    size_hint,
-)
-from whitebox_tools_spark.operators.gridding import GridConfig, _warn_nonconverged
+from whitebox_tools_spark.operators.fixpoint import closure, fixpoint, unchanged
+from whitebox_tools_spark.operators.graph import connected_components, size_hint
+from whitebox_tools_spark.operators.gridding import GridConfig
 from whitebox_tools_spark.operators.hydro import D8_DX, D8_DY, _d8_dir_stencil
+from whitebox_tools_spark.operators.streams import downstream_len, upstream_len
 
 
 def _lens(cfg: GridConfig):
@@ -212,26 +210,7 @@ def fill_depressions(
             ).alias("w"),
         )
 
-    batch = 2  # two lazy Planchon-Darboux lowerings per checkpoint + check
-    converged = False
-    for _ in range(max(1, (max_rounds + batch - 1) // batch)):
-        nxt = w
-        for _ in range(batch):
-            nxt = _lower(nxt)
-        nxt = nxt.transform(checkpoint_nostats)
-        changed = (
-            nxt.alias("n")
-            .join(w.alias("o"), "id")
-            .where(F.col("n.w") != F.col("o.w"))
-            .limit(1)
-            .count()
-        )
-        w = nxt
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        _warn_nonconverged("fill_depressions", max_rounds)
+    w = fixpoint("fill_depressions", w, _lower, unchanged("id", "w"), max_rounds)
     return w.select("row", "col", F.col("w").alias("value"))
 
 
@@ -343,61 +322,24 @@ def fd8_flow_accumulation(
     )
     acc = cells.select("id", F.lit(1.0).alias("val")).localCheckpoint(eager=True)
     small = cfg.rows * cfg.cols <= 2_000_000
-    for _ in range(max_rounds):
+
+    def step(acc):
         up = (
             edges.join(size_hint(acc, small), edges.a == acc.id)
             .groupBy("b")
             .agg(F.sum(F.col("w") * F.col("val")).alias("s"))
         )
-        nxt = (
+        return (
             cells.select("id")
             .join(size_hint(up.withColumnRenamed("b", "id"), small), "id", "left")
             .select("id", (F.lit(1.0) + F.coalesce("s", F.lit(0.0))).alias("val"))
-            .transform(checkpoint_nostats)
         )
-        changed = (
-            nxt.alias("n")
-            .join(acc.alias("o"), "id")
-            .where(F.col("n.val") != F.col("o.val"))
-            .limit(1)
-            .count()
-        )
-        acc = nxt
-        if changed == 0:
-            break
-    else:
-        _warn_nonconverged("fd8_flow_accumulation", max_rounds)
+
+    acc = fixpoint("fd8_flow_accumulation", acc, step, unchanged("id", "val"), max_rounds)
     return cells.join(acc, "id").select("row", "col", F.col("val").alias("value"))
 
 
 # --------------------------------------------- flow-path length family
-
-
-def _upstream_len_fixpoint(nodes, edges, init_lit, agg_fn, max_rounds=100):
-    cur = nodes.select("id", init_lit.alias("val")).localCheckpoint(eager=True)
-    small = cur.count() <= 2_000_000
-    for _ in range(max_rounds):
-        up = (
-            edges.join(size_hint(cur, small), edges.a == cur.id)
-            .groupBy("b")
-            .agg(agg_fn(F.col("val") + F.col("len")).alias("s"))
-        )
-        nxt = (
-            nodes.select("id")
-            .join(size_hint(up.withColumnRenamed("b", "id"), small), "id", "left")
-            .select("id", F.coalesce("s", init_lit).alias("val"))
-            .transform(checkpoint_nostats)
-        )
-        changed = (
-            nxt.alias("n").join(cur.alias("o"), "id")
-            .where(F.col("n.val") != F.col("o.val")).limit(1).count()
-        )
-        cur = nxt
-        if changed == 0:
-            break
-    else:
-        _warn_nonconverged("_upstream_len_fixpoint", max_rounds)
-    return cur
 
 
 def max_upslope_flowpath_length(
@@ -406,7 +348,7 @@ def max_upslope_flowpath_length(
     """MaxUpslopeFlowpathLength (max_upslope_flowpath.rs): longest D8
     flow path draining through each cell (ridge cells are 0)."""
     nodes, edges = d8_graph(raster, cfg, tile_size)
-    vals = _upstream_len_fixpoint(nodes, edges, F.lit(0.0), F.max)
+    vals = upstream_len("max_upslope_flowpath_length", nodes, edges, F.max)
     return nodes.join(vals, "id").select("row", "col", F.col("val").alias("value"))
 
 
@@ -416,25 +358,7 @@ def downslope_flowpath_length(
     """DownslopeFlowpathLength (downslope_flowpath_length.rs): D8 path
     length from each cell to its terminal cell (pit/edge = 0)."""
     nodes, edges = d8_graph(raster, cfg, tile_size)
-    cur = nodes.select("id", F.lit(0.0).alias("val")).localCheckpoint(eager=True)
-    small = cur.count() <= 2_000_000
-    for _ in range(100):
-        dn = edges.join(size_hint(cur, small), edges.b == cur.id).select(
-            F.col("a").alias("id"), (F.col("val") + F.col("len")).alias("s")
-        )
-        nxt = (
-            nodes.select("id")
-            .join(dn, "id", "left")
-            .select("id", F.coalesce("s", F.lit(0.0)).alias("val"))
-            .transform(checkpoint_nostats)
-        )
-        changed = (
-            nxt.alias("n").join(cur.alias("o"), "id")
-            .where(F.col("n.val") != F.col("o.val")).limit(1).count()
-        )
-        cur = nxt
-        if changed == 0:
-            break
+    cur = downstream_len("downslope_flowpath_length", nodes, edges)
     return nodes.join(cur, "id").select("row", "col", F.col("val").alias("value"))
 
 
@@ -455,11 +379,10 @@ def _stream_relative(raster, streams, cfg, mode: str, tile_size: int = 128):
         .join(zmap, "id")
         .select("id", F.lit(0.0).alias("dist"), F.col("z").alias("sz"))
     )
-    known = scells.localCheckpoint(eager=True)
-    frontier = known
     small = cfg.rows * cfg.cols <= 2_000_000
-    for _ in range(400):
-        step = (
+
+    def expand(frontier, known):
+        return (
             edges.join(size_hint(frontier, small), edges.b == frontier.id)
             .select(
                 F.col("a").alias("id"),
@@ -472,11 +395,8 @@ def _stream_relative(raster, streams, cfg, mode: str, tile_size: int = 128):
                 "left_anti",
             )
         )
-        cnt = step.limit(1).count()
-        if cnt == 0:
-            break
-        known = known.unionByName(step).transform(checkpoint_nostats)
-        frontier = step.transform(checkpoint_nostats)
+
+    known = closure(f"stream_relative_{mode}", scells.localCheckpoint(eager=True), expand, 400)
     out = nodes.join(known, "id").join(zmap, "id")
     if mode == "dist":
         return out.select("row", "col", F.col("dist").alias("value"))
@@ -497,19 +417,19 @@ def elevation_above_stream(raster, streams, cfg: GridConfig, tile_size=128):
 # ------------------------------------------------------------- basins
 
 
-def basins(raster: DataFrame, cfg: GridConfig, tile_size: int = 128) -> DataFrame:
-    """Basins (basins.rs / watershed.rs semantics): every cell labelled
-    by its terminal (outlet/pit) cell, via pointer doubling; labels are
-    dense ranks of the terminal cell id."""
-    nodes, edges = d8_graph(raster, cfg, tile_size)
+def d8_terminal(name: str, nodes, edges, cfg: GridConfig) -> DataFrame:
+    """(id, nxt): the terminal (outlet/pit) cell of every cell's D8 path,
+    via pointer doubling (next <- next(next)); 32 doublings bound the
+    path length by 2^32."""
     nxt = (
         nodes.join(edges.select(F.col("a").alias("id"), "b"), "id", "left")
         .select("id", F.coalesce("b", F.col("id")).alias("nxt"))
         .localCheckpoint(eager=True)
     )
     small = cfg.rows * cfg.cols <= 2_000_000
-    for _ in range(32):  # 2^32 path length bound
-        hop = nxt.alias("x").join(
+
+    def hop(nxt):
+        return nxt.alias("x").join(
             size_hint(
                 nxt.alias("y").select(
                     F.col("y.id").alias("nid"), F.col("y.nxt").alias("n2")
@@ -518,13 +438,16 @@ def basins(raster: DataFrame, cfg: GridConfig, tile_size: int = 128) -> DataFram
             ),
             F.col("x.nxt") == F.col("nid"),
         ).select(F.col("x.id").alias("id"), F.col("n2").alias("nxt"))
-        changed = (
-            hop.alias("n").join(nxt.alias("o"), "id")
-            .where(F.col("n.nxt") != F.col("o.nxt")).limit(1).count()
-        )
-        nxt = hop.transform(checkpoint_nostats)
-        if changed == 0:
-            break
+
+    return fixpoint(name, nxt, hop, unchanged("id", "nxt"), 32)
+
+
+def basins(raster: DataFrame, cfg: GridConfig, tile_size: int = 128) -> DataFrame:
+    """Basins (basins.rs / watershed.rs semantics): every cell labelled
+    by its terminal (outlet/pit) cell, via pointer doubling; labels are
+    dense ranks of the terminal cell id."""
+    nodes, edges = d8_graph(raster, cfg, tile_size)
+    nxt = d8_terminal("basins", nodes, edges, cfg)
     first = nxt.select("nxt").distinct()
     ranked = first.withColumn(
         "fid", F.row_number().over(Window.orderBy("nxt")).cast("double")
@@ -604,11 +527,10 @@ def trace_downslope_flowpaths(
     over (reach-set grows as path closure)."""
     nodes, edges = d8_graph(raster, cfg, tile_size)
     seed_ids = seeds.select((F.col("row") * cfg.cols + F.col("col")).alias("id"))
-    reached = seed_ids.localCheckpoint(eager=True)
-    frontier = reached
     small = cfg.rows * cfg.cols <= 2_000_000
-    for _ in range(400):
-        step = (
+
+    def expand(frontier, reached):
+        return (
             edges.join(size_hint(frontier, small), edges.a == frontier.id)
             .select(F.col("b").alias("id"))
             .join(
@@ -618,10 +540,10 @@ def trace_downslope_flowpaths(
             )
             .distinct()
         )
-        if step.limit(1).count() == 0:
-            break
-        reached = reached.unionByName(step).transform(checkpoint_nostats)
-        frontier = step.transform(checkpoint_nostats)
+
+    reached = closure(
+        "trace_downslope_flowpaths", seed_ids.localCheckpoint(eager=True), expand, 400
+    )
     return nodes.join(reached, "id", "left_semi").select(
         "row", "col", F.lit(1.0).alias("value")
     )
@@ -659,24 +581,16 @@ def breach_depressions(
     ).localCheckpoint(eager=True)
     m = z.select("id", F.col("z").alias("val")).localCheckpoint(eager=True)
     small = cfg.rows * cfg.cols <= 2_000_000
-    for _ in range(max_rounds):
+
+    def step(m):
         up = (
             edges.join(size_hint(m, small), edges.a == m.id)
             .groupBy("b")
             .agg(F.min("val").alias("mn"))
         )
-        nxt = (
-            m.join(size_hint(up.withColumnRenamed("b", "id"), small), "id", "left")
-            .select("id", F.least(F.col("val"), F.coalesce("mn", "val")).alias("val"))
-            .transform(checkpoint_nostats)
+        return m.join(size_hint(up.withColumnRenamed("b", "id"), small), "id", "left").select(
+            "id", F.least(F.col("val"), F.coalesce("mn", "val")).alias("val")
         )
-        changed = (
-            nxt.alias("n").join(m.alias("o"), "id")
-            .where(F.col("n.val") != F.col("o.val")).limit(1).count()
-        )
-        m = nxt
-        if changed == 0:
-            break
-    else:
-        _warn_nonconverged("breach_depressions", max_rounds)
+
+    m = fixpoint("breach_depressions", m, step, unchanged("id", "val"), max_rounds)
     return z.join(m, "id").select("row", "col", F.col("val").alias("value"))

@@ -30,7 +30,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from whitebox_tools_spark.operators.branch import _path_closure
-from whitebox_tools_spark.operators.gridding import GridConfig, _warn_nonconverged
+from whitebox_tools_spark.operators.fixpoint import warn_cap
+from whitebox_tools_spark.operators.gridding import GridConfig
 from whitebox_tools_spark.operators.hydro2 import d8_graph
 
 IDX = [1, 1, 1, 0, -1, -1, -1, 0]
@@ -124,7 +125,7 @@ def isobasins(
         )
         marks = marks.unionByName(new_marks).distinct().localCheckpoint(eager=True)
     else:
-        _warn_nonconverged("isobasins", max_rounds)
+        warn_cap("isobasins", max_rounds)
 
     marks = (
         marks.unionByName(nodes.where(F.col("dir") < 0).select("id"))

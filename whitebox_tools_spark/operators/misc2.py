@@ -157,6 +157,7 @@ def downslope_index(
     angle = degrees(atan(drop / dist)), dist = flow-path distance to the
     first cell at least ``drop`` lower; cells whose path never drops that
     far are NoData."""
+    from whitebox_tools_spark.operators.fixpoint import warn_cap
     from whitebox_tools_spark.operators.hydro2 import d8_graph
 
     nodes, edges = d8_graph(raster, cfg, tile_size)
@@ -186,6 +187,8 @@ def downslope_index(
         active = step.where(F.col("z0") - F.col("zc") < drop).select(
             "src", "cur", "d", "z0"
         ).localCheckpoint(eager=True)
+    else:
+        warn_cap("downslope_index", max_rounds)
     best = done.groupBy("src").agg(F.min("d").alias("dist"))
     return (
         nodes.join(best.withColumnRenamed("src", "id"), "id")

@@ -7,7 +7,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from whitebox_tools_spark.operators.graph import checkpoint_nostats
+from whitebox_tools_spark.operators.fixpoint import pointer_reach
 from whitebox_tools_spark.operators.gridding import GridConfig
 
 
@@ -76,27 +76,11 @@ def cost_pathway(
         )
         .localCheckpoint(eager=True)
     )
-    on = dest_ids.distinct().localCheckpoint(eager=True)
-    jump = succ
-    rounds = max(1, math.ceil(math.log2(max_steps)))
-    prev_n = on.count()
-    for k in range(rounds):
-        stepped = (
-            on.join(jump, "id").select(F.col("nxt").alias("id"))
-        )
-        on = on.unionByName(stepped).distinct().transform(checkpoint_nostats)
-        n = on.count()
-        if n == prev_n:
-            break  # all walks have reached their source self-loops
-        prev_n = n
-        if k < rounds - 1:
-            jx = jump.select(F.col("id").alias("jid"), F.col("nxt").alias("mid"))
-            jy = jump.select(F.col("id").alias("mid"), F.col("nxt").alias("jnxt"))
-            jump = (
-                jx.join(jy, "mid")
-                .select(F.col("jid").alias("id"), F.col("jnxt").alias("nxt"))
-                .transform(checkpoint_nostats)
-            )
+    # one shared src: only the union of the walks is marked
+    start = dest_ids.select(F.lit(0).alias("src"), F.col("id").alias("cur"))
+    on = pointer_reach("cost_pathway", start.distinct(), succ, max_steps).select(
+        F.col("cur").alias("id")
+    )
     return cells.join(on, "id", "left_semi").select(
         "row", "col", F.lit(1.0).alias("value")
     )

@@ -8,7 +8,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from whitebox_tools_spark.operators.graph import checkpoint_nostats
+from whitebox_tools_spark.operators.fixpoint import checkpoint_nostats, pointer_reach
 from whitebox_tools_spark.operators.gridding import GridConfig
 
 SD_A1, SD_B1 = 22695477, 1
@@ -24,8 +24,6 @@ def unnest_basins(
     downstream on its D8 flow path; output (row, col, value=level) at
     the pour cells."""
     from whitebox_tools_spark.operators.hydro2 import d8_graph
-
-    import math as _math
 
     nodes, edges = d8_graph(raster, cfg, tile_size)
     pset = pour.select(
@@ -48,35 +46,12 @@ def unnest_basins(
         .select(
             "id",
             F.coalesce("nxt", F.col("id")).alias("nxt"),
-            F.coalesce("inc", F.lit(0)).alias("inc"),
+            F.coalesce("inc", F.lit(0)).alias("n"),
         )
         .localCheckpoint(eager=True)
     )
-    reach = pset.select(
-        F.col("id").alias("src"), F.col("id").alias("cur"), F.lit(0).alias("n")
-    ).localCheckpoint(eager=True)
-    jump = succ
-    rounds = max(1, _math.ceil(_math.log2(max(2, max_rounds))))
-    prev_n = reach.count()
-    for k in range(rounds):
-        stepped = (
-            reach.join(jump, reach.cur == jump.id)
-            .select("src", F.col("nxt").alias("cur"), (F.col("n") + F.col("inc")).alias("n"))
-        )
-        reach = reach.unionByName(stepped).distinct().transform(checkpoint_nostats)
-        n_now = reach.count()
-        if n_now == prev_n:
-            break
-        prev_n = n_now
-        if k < rounds - 1:
-            jx = jump.select(F.col("id").alias("jid"), F.col("nxt").alias("mid"), F.col("inc").alias("i1"))
-            jy = jump.select(F.col("id").alias("mid"), F.col("nxt").alias("jnxt"), F.col("inc").alias("i2"))
-            jump = (
-                jx.join(jy, "mid")
-                .select(F.col("jid").alias("id"), F.col("jnxt").alias("nxt"),
-                        (F.col("i1") + F.col("i2")).alias("inc"))
-                .transform(checkpoint_nostats)
-            )
+    start = pset.select(F.col("id").alias("src"), F.col("id").alias("cur"), F.lit(0).alias("n"))
+    reach = pointer_reach("unnest_basins", start, succ, max_rounds, carry="n")
     lvl = reach.groupBy("src").agg(F.max("n").alias("lv"))
     return (
         nodes.join(lvl.withColumnRenamed("src", "id"), "id")

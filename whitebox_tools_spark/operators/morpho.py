@@ -19,10 +19,10 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
+from whitebox_tools_spark.operators.fixpoint import fixpoint, unchanged
 from whitebox_tools_spark.operators.focal import focal_apply
-from whitebox_tools_spark.operators.gridding import GridConfig, _warn_nonconverged
+from whitebox_tools_spark.operators.gridding import GridConfig
 
 MDX = [1, 1, 1, 0, -1, -1, -1, 0]
 MDY = [-1, 0, 1, 1, 1, 0, -1, -1]
@@ -83,24 +83,14 @@ def line_thinning(
 ) -> DataFrame:
     """LineThinning (image_analysis/line_thin.rs): iterated 4-directional
     hit-and-miss deletion until stable (synchronous engine form)."""
-    cur = raster.localCheckpoint(eager=True)
-    for _ in range(max_rounds):
-        nxt = cur
+
+    def thin(cur):
         for a in range(4):
-            nxt = _thin_pass(nxt, cfg, a, tile_size).localCheckpoint(eager=True)
-        changed = (
-            nxt.alias("n")
-            .join(cur.alias("o"), ["row", "col"])
-            .where(F.col("n.value") != F.col("o.value"))
-            .limit(1)
-            .count()
-        )
-        cur = nxt
-        if changed == 0:
-            break
-    else:
-        _warn_nonconverged("line_thinning", max_rounds)
-    return cur
+            cur = _thin_pass(cur, cfg, a, tile_size)
+        return cur
+
+    cur = raster.localCheckpoint(eager=True)
+    return fixpoint("line_thinning", cur, thin, unchanged(["row", "col"], "value"), max_rounds)
 
 
 def thicken_raster_line(

@@ -129,32 +129,29 @@ def _walk_face(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def polygonize(lines: DataFrame, peel_rounds: int = 32) -> DataFrame:
     """(fid, vi, x, y): canonical vertex rows of every enclosed polygon."""
+    from whitebox_tools_spark.operators.fixpoint import fixpoint, same_count
     from whitebox_tools_spark.operators.graph import connected_components
 
     edges = _pieces(lines).localCheckpoint(eager=True)
 
     # 2-core peel: drop pieces with an endpoint of degree 1
-    for _ in range(peel_rounds):
+    def peel(edges):
         ends = edges.select(F.col("ax").alias("x"), F.col("ay").alias("y")).unionAll(
             edges.select(F.col("bx").alias("x"), F.col("by").alias("y"))
         )
         deg = ends.groupBy("x", "y").agg(F.count(F.lit(1)).alias("deg"))
         d1 = deg.where(F.col("deg") <= 1)
-        nxt = (
-            edges.join(
-                d1.select(F.col("x").alias("ax"), F.col("y").alias("ay")),
-                ["ax", "ay"],
-                "left_anti",
-            ).join(
-                d1.select(F.col("x").alias("bx"), F.col("y").alias("by")),
-                ["bx", "by"],
-                "left_anti",
-            )
-        ).localCheckpoint(eager=True)
-        if nxt.count() == edges.count():
-            edges = nxt
-            break
-        edges = nxt
+        return edges.join(
+            d1.select(F.col("x").alias("ax"), F.col("y").alias("ay")),
+            ["ax", "ay"],
+            "left_anti",
+        ).join(
+            d1.select(F.col("x").alias("bx"), F.col("y").alias("by")),
+            ["bx", "by"],
+            "left_anti",
+        )
+
+    edges = fixpoint("polygonize_peel", edges, peel, same_count, peel_rounds)
 
     # ids are stable: assigned on a materialized (checkpointed) frame
     eid = edges.withColumn("e", F.monotonically_increasing_id())

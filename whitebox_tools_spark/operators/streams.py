@@ -5,8 +5,8 @@ All ops share one graph: stream cells (streams raster > 0.0) joined to a
 D8 direction-index raster give nodes; stream-to-stream downstream links
 with their grid lengths give edges (each node has <= 1 outgoing edge, so
 the graph is a forest flowing to outlets). Propagations are bounded
-driver-loop fixpoints — each round is one or two hash joins on cell id,
-localCheckpoint'ed; convergence takes stream-DAG-depth rounds.
+driver-loop fixpoints (operators/fixpoint.py) — each round is one or two
+hash joins on cell id; convergence takes stream-DAG-depth rounds.
 
 Link identity deviation: the reference assigns link ids in discovery
 (scan) order (stream_link_id.rs); a distributed engine has no scan order,
@@ -22,7 +22,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from whitebox_tools_spark.operators.graph import connected_components
+from whitebox_tools_spark.operators.fixpoint import fixpoint, unchanged
+from whitebox_tools_spark.operators.graph import connected_components, size_hint
 from whitebox_tools_spark.operators.gridding import GridConfig
 from whitebox_tools_spark.operators.hydro import D8_DX, D8_DY
 
@@ -55,32 +56,44 @@ def stream_graph(streams: DataFrame, dirs: DataFrame, cfg: GridConfig):
     return nodes, edges
 
 
-def _fixpoint(nodes, update, max_rounds: int = 100, batch: int = 2):
-    """Iterate val(id) <- update(prev) until unchanged. ``update`` takes a
-    DataFrame (id, val) and returns the next (id, val). ``batch`` update
-    rounds run lazily between each checkpoint + convergence check —
-    halves the driver-side action count (a converged extra round is
-    idempotent, so correctness is unaffected)."""
-    from whitebox_tools_spark.operators.graph import checkpoint_nostats, size_hint
+def upstream_len(name, nodes, edges, agg_fn, max_rounds: int = 100) -> DataFrame:
+    """(id, val): ``agg_fn`` over the inflowing edges a->b of val(a) +
+    len, 0.0 where nothing flows in — F.sum gives the total upstream
+    length, F.max the longest upstream path."""
+    small = nodes.count() <= 2_000_000
 
-    cur = update(None).localCheckpoint(eager=True)
-    small = cur.count() <= 2_000_000
-    for _ in range(max(1, (max_rounds + batch - 1) // batch)):
-        nxt = cur
-        for _ in range(batch):
-            nxt = update(size_hint(nxt, small))
-        nxt = nxt.transform(checkpoint_nostats)
-        changed = (
-            nxt.alias("n")
-            .join(cur.alias("o"), "id")
-            .where(F.col("n.val") != F.col("o.val"))
-            .limit(1)
-            .count()
+    def step(cur):
+        up = (
+            edges.join(size_hint(cur, small), edges.a == cur.id)
+            .groupBy("b")
+            .agg(agg_fn(F.col("val") + F.col("len")).alias("s"))
         )
-        cur = nxt
-        if changed == 0:
-            break
-    return cur
+        return (
+            nodes.select("id")
+            .join(size_hint(up.withColumnRenamed("b", "id"), small), "id", "left")
+            .select("id", F.coalesce("s", F.lit(0.0)).alias("val"))
+        )
+
+    init = nodes.select("id", F.lit(0.0).alias("val"))
+    return fixpoint(name, init, step, unchanged("id", "val"), max_rounds)
+
+
+def downstream_len(name, nodes, edges, max_rounds: int = 100) -> DataFrame:
+    """(id, val): path length from each node to its outlet (outlets 0)."""
+    small = nodes.count() <= 2_000_000
+
+    def step(cur):
+        dn = edges.join(size_hint(cur, small), edges.b == cur.id).select(
+            F.col("a").alias("id"), (F.col("val") + F.col("len")).alias("s")
+        )
+        return (
+            nodes.select("id")
+            .join(dn, "id", "left")
+            .select("id", F.coalesce("s", F.lit(0.0)).alias("val"))
+        )
+
+    init = nodes.select("id", F.lit(0.0).alias("val"))
+    return fixpoint(name, init, step, unchanged("id", "val"), max_rounds)
 
 
 def _as_raster(nodes, vals) -> DataFrame:
@@ -93,14 +106,10 @@ def shreve_magnitude(streams, dirs, cfg: GridConfig, max_rounds: int = 100) -> D
     """ShreveStreamMagnitude (shreve_magnitude.rs:300-360): heads are 1;
     every cell is the sum of its inflowing stream magnitudes."""
     nodes, edges = stream_graph(streams, dirs, cfg)
-    heads = nodes.join(edges.select(F.col("b").alias("id")), "id", "left_anti").select(
-        "id"
-    )
+    small = cfg.rows * cfg.cols <= 2_000_000
 
-    def update(prev):
-        if prev is None:
-            return nodes.select("id", F.lit(1).alias("val"))
-        up = edges.join(prev, edges.a == prev.id).groupBy("b").agg(
+    def step(prev):
+        up = edges.join(size_hint(prev, small), edges.a == prev.id).groupBy("b").agg(
             F.sum("val").alias("s")
         )
         return (
@@ -109,7 +118,9 @@ def shreve_magnitude(streams, dirs, cfg: GridConfig, max_rounds: int = 100) -> D
             .select("id", F.coalesce("s", F.lit(1)).alias("val"))
         )
 
-    return _as_raster(nodes, _fixpoint(nodes, update, max_rounds))
+    init = nodes.select("id", F.lit(1).alias("val"))
+    vals = fixpoint("shreve_magnitude", init, step, unchanged("id", "val"), max_rounds)
+    return _as_raster(nodes, vals)
 
 
 def length_of_upstream_channels(
@@ -121,22 +132,7 @@ def length_of_upstream_channels(
     cell by grid_lengths[dir] before propagating, :377, for any valid
     pointer — even when the downstream cell is not a stream cell)."""
     nodes, edges = stream_graph(streams, dirs, cfg)
-
-    def update(prev):
-        if prev is None:
-            return nodes.select("id", F.lit(0.0).alias("val"))
-        up = (
-            edges.join(prev, edges.a == prev.id)
-            .groupBy("b")
-            .agg(F.sum(F.col("val") + F.col("len")).alias("s"))
-        )
-        return (
-            nodes.select("id")
-            .join(up.select(F.col("b").alias("id"), "s"), "id", "left")
-            .select("id", F.coalesce("s", F.lit(0.0)).alias("val"))
-        )
-
-    upstream = _fixpoint(nodes, update, max_rounds)
+    upstream = upstream_len("length_of_upstream_channels", nodes, edges, F.sum, max_rounds)
     diag = math.sqrt(cfg.res_x * cfg.res_x + cfg.res_y * cfg.res_y)
     lens = [diag, cfg.res_x, diag, cfg.res_y, diag, cfg.res_x, diag, cfg.res_y]
     ln = F.array(*[F.lit(v) for v in lens])
@@ -158,22 +154,8 @@ def farthest_channel_head(
     """FarthestChannelHead (farthest_channel_head.rs:361-382): distance
     along the channel to the most distant upstream head (heads are 0)."""
     nodes, edges = stream_graph(streams, dirs, cfg)
-
-    def update(prev):
-        if prev is None:
-            return nodes.select("id", F.lit(0.0).alias("val"))
-        up = (
-            edges.join(prev, edges.a == prev.id)
-            .groupBy("b")
-            .agg(F.max(F.col("val") + F.col("len")).alias("s"))
-        )
-        return (
-            nodes.select("id")
-            .join(up.select(F.col("b").alias("id"), "s"), "id", "left")
-            .select("id", F.coalesce("s", F.lit(0.0)).alias("val"))
-        )
-
-    return _as_raster(nodes, _fixpoint(nodes, update, max_rounds))
+    vals = upstream_len("farthest_channel_head", nodes, edges, F.max, max_rounds)
+    return _as_raster(nodes, vals)
 
 
 def distance_to_outlet(
@@ -182,20 +164,8 @@ def distance_to_outlet(
     """DistanceToOutlet (dist_to_outlet.rs:309-376): channel distance to
     the network outlet (outlets are 0), accumulated upstream."""
     nodes, edges = stream_graph(streams, dirs, cfg)
-
-    def update(prev):
-        if prev is None:
-            return nodes.select("id", F.lit(0.0).alias("val"))
-        dn = edges.join(prev, edges.b == prev.id).select(
-            F.col("a").alias("id"), (F.col("val") + F.col("len")).alias("s")
-        )
-        return (
-            nodes.select("id")
-            .join(dn, "id", "left")
-            .select("id", F.coalesce("s", F.lit(0.0)).alias("val"))
-        )
-
-    return _as_raster(nodes, _fixpoint(nodes, update, max_rounds))
+    vals = downstream_len("distance_to_outlet", nodes, edges, max_rounds)
+    return _as_raster(nodes, vals)
 
 
 def topological_stream_order(
@@ -212,11 +182,10 @@ def topological_stream_order(
         .select("a", "b", F.when(F.col("jid").isNotNull(), 1).otherwise(0).alias("inc"))
         .localCheckpoint(eager=True)
     )
+    small = cfg.rows * cfg.cols <= 2_000_000
 
-    def update(prev):
-        if prev is None:
-            return nodes.select("id", F.lit(1).alias("val"))
-        dn = step.join(prev, step.b == prev.id).select(
+    def down(prev):
+        dn = step.join(size_hint(prev, small), step.b == prev.id).select(
             F.col("a").alias("id"), (F.col("val") + F.col("inc")).alias("s")
         )
         return (
@@ -225,7 +194,9 @@ def topological_stream_order(
             .select("id", F.coalesce("s", F.lit(1)).alias("val"))
         )
 
-    return _as_raster(nodes, _fixpoint(nodes, update, max_rounds))
+    init = nodes.select("id", F.lit(1).alias("val"))
+    vals = fixpoint("topological_stream_order", init, down, unchanged("id", "val"), max_rounds)
+    return _as_raster(nodes, vals)
 
 
 def _links(nodes, edges):

@@ -17,9 +17,10 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from whitebox_tools_spark.operators.graph import checkpoint_nostats, size_hint
+from whitebox_tools_spark.operators.fixpoint import closure, fixpoint, unchanged
+from whitebox_tools_spark.operators.graph import size_hint
 from whitebox_tools_spark.operators.gridding import GridConfig
-from whitebox_tools_spark.operators.streams import stream_graph
+from whitebox_tools_spark.operators.streams import stream_graph, upstream_len
 
 
 def _as_raster(nodes, vals) -> DataFrame:
@@ -110,28 +111,8 @@ def stream_link_slope(streams, dirs, z, cfg: GridConfig) -> DataFrame:
 
 def _fh(nodes, edges, max_rounds=100):
     """Farthest-head distance per cell (0 at heads) — main-stem criterion."""
-    cur = nodes.select("id", F.lit(0.0).alias("fh")).localCheckpoint(eager=True)
-    small = cur.count() <= 2_000_000
-    for _ in range(max_rounds):
-        up = (
-            edges.join(size_hint(cur, small), edges.a == cur.id)
-            .groupBy("b")
-            .agg(F.max(F.col("fh") + F.col("len")).alias("s"))
-        )
-        nxt = (
-            nodes.select("id")
-            .join(size_hint(up.withColumnRenamed("b", "id"), small), "id", "left")
-            .select("id", F.coalesce("s", F.lit(0.0)).alias("fh"))
-            .transform(checkpoint_nostats)
-        )
-        changed = (
-            nxt.alias("n").join(cur.alias("o"), "id")
-            .where(F.col("n.fh") != F.col("o.fh")).limit(1).count()
-        )
-        cur = nxt
-        if changed == 0:
-            break
-    return cur
+    fh = upstream_len("farthest_head", nodes, edges, F.max, max_rounds)
+    return fh.withColumnRenamed("val", "fh")
 
 
 def _main_flags(nodes, edges, criterion):
@@ -160,24 +141,19 @@ def hack_order(streams, dirs, cfg: GridConfig, max_rounds: int = 100) -> DataFra
         )
         .localCheckpoint(eager=True)
     )
-    cur = nodes.select("id", F.lit(1).alias("val")).localCheckpoint(eager=True)
-    small = cur.count() <= 2_000_000
-    for _ in range(max_rounds):
+    small = nodes.count() <= 2_000_000
+
+    def down(cur):
         dn = step.join(size_hint(cur, small), step.b == cur.id).select(
             F.col("a").alias("id"), (F.col("val") + F.col("inc")).alias("s")
         )
-        nxt = (
+        return (
             nodes.select("id").join(size_hint(dn, small), "id", "left")
             .select("id", F.coalesce("s", F.lit(1)).alias("val"))
-            .transform(checkpoint_nostats)
         )
-        changed = (
-            nxt.alias("n").join(cur.alias("o"), "id")
-            .where(F.col("n.val") != F.col("o.val")).limit(1).count()
-        )
-        cur = nxt
-        if changed == 0:
-            break
+
+    cur = nodes.select("id", F.lit(1).alias("val")).localCheckpoint(eager=True)
+    cur = fixpoint("hack_order", cur, down, unchanged("id", "val"), max_rounds)
     return _as_raster(nodes, cur)
 
 
@@ -204,26 +180,20 @@ def horton_order(streams, dirs, cfg: GridConfig, max_rounds: int = 100) -> DataF
         )
         .localCheckpoint(eager=True)
     )
-    cur = strah.select("id", F.col("ord").alias("val")).localCheckpoint(eager=True)
-    small = cur.count() <= 2_000_000
-    for _ in range(max_rounds):
+    small = strah.count() <= 2_000_000
+
+    def down(cur):
         dn = (
             step.where(F.col("inherit"))
             .join(size_hint(cur, small), step.b == cur.id)
             .select(F.col("a").alias("id"), F.col("val").alias("s"))
         )
-        nxt = (
-            strah.join(size_hint(dn, small), "id", "left")
-            .select("id", F.coalesce("s", F.col("ord")).alias("val"))
-            .transform(checkpoint_nostats)
+        return strah.join(size_hint(dn, small), "id", "left").select(
+            "id", F.coalesce("s", F.col("ord")).alias("val")
         )
-        changed = (
-            nxt.alias("n").join(cur.alias("o"), "id")
-            .where(F.col("n.val") != F.col("o.val")).limit(1).count()
-        )
-        cur = nxt
-        if changed == 0:
-            break
+
+    cur = strah.select("id", F.col("ord").alias("val"))
+    cur = fixpoint("horton_order", cur, down, unchanged("id", "val"), max_rounds)
     return _as_raster(nodes, cur)
 
 
@@ -236,27 +206,22 @@ def tributary_id(streams, dirs, cfg: GridConfig, max_rounds: int = 100) -> DataF
     ej = edges.join(fh.withColumnRenamed("id", "a"), "a")
     flags = _main_flags(nodes, ej, F.col("fh") + F.col("len")).localCheckpoint(eager=True)
     # propagate the head id downstream along main edges
-    cur = nodes.select("id", F.col("id").alias("val")).localCheckpoint(eager=True)
-    small = cur.count() <= 2_000_000
-    for _ in range(max_rounds):
-        up = (
+    small = nodes.count() <= 2_000_000
+
+    def up(cur):
+        head = (
             flags.where(F.col("is_main"))
             .join(size_hint(cur, small), F.col("a") == cur.id)
             .select(F.col("b").alias("id"), F.col("val").alias("s"))
         )
-        nxt = (
+        return (
             nodes.select("id")
-            .join(size_hint(up, small), "id", "left")
+            .join(size_hint(head, small), "id", "left")
             .select("id", F.coalesce("s", F.col("id")).alias("val"))
-            .transform(checkpoint_nostats)
         )
-        changed = (
-            nxt.alias("n").join(cur.alias("o"), "id")
-            .where(F.col("n.val") != F.col("o.val")).limit(1).count()
-        )
-        cur = nxt
-        if changed == 0:
-            break
+
+    cur = nodes.select("id", F.col("id").alias("val"))
+    cur = fixpoint("tributary_id", cur, up, unchanged("id", "val"), max_rounds)
     ranked = cur.select("val").distinct().withColumn(
         "tid", F.row_number().over(Window.orderBy("val"))
     )
@@ -273,11 +238,10 @@ def find_main_stem(streams, dirs, cfg: GridConfig, max_rounds: int = 100) -> Dat
     ej = edges.join(fh.withColumnRenamed("id", "a"), "a")
     flags = _main_flags(nodes, ej, F.col("fh") + F.col("len")).localCheckpoint(eager=True)
     outlets = nodes.join(edges.select(F.col("a").alias("id")), "id", "left_anti").select("id")
-    on = outlets.localCheckpoint(eager=True)
-    frontier = on
     small = nodes.count() <= 2_000_000
-    for _ in range(max_rounds):
-        step = (
+
+    def expand(frontier, on):
+        return (
             flags.where(F.col("is_main"))
             .join(size_hint(frontier, small), flags.b == frontier.id)
             .select(F.col("a").alias("id"))
@@ -287,10 +251,8 @@ def find_main_stem(streams, dirs, cfg: GridConfig, max_rounds: int = 100) -> Dat
                 "left_anti",
             )
         )
-        if step.limit(1).count() == 0:
-            break
-        on = on.unionByName(step).transform(checkpoint_nostats)
-        frontier = step.transform(checkpoint_nostats)
+
+    on = closure("find_main_stem", outlets.localCheckpoint(eager=True), expand, max_rounds)
     vals = nodes.select("id").join(
         on.select(F.col("id").alias("m")), nodes.id == F.col("m"), "left"
     ).select("id", F.when(F.col("m").isNotNull(), 1.0).otherwise(0.0).alias("val"))

@@ -12,10 +12,11 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from whitebox_tools_spark.operators.fixpoint import fixpoint, unchanged
 from whitebox_tools_spark.operators.focal import focal_apply, horn_fxfy
 from whitebox_tools_spark.operators.gridding import GridConfig
 from whitebox_tools_spark.operators.hydro import D8_DX, D8_DY
-from whitebox_tools_spark.operators.hydro2 import d8_graph
+from whitebox_tools_spark.operators.hydro2 import d8_graph, d8_terminal
 from whitebox_tools_spark.operators.terrain import _ring8
 
 
@@ -212,23 +213,7 @@ def elev_above_pit(raster: DataFrame, cfg: GridConfig, tile_size: int = 128) -> 
     elevation of the terminal (pit/edge) cell of the cell's D8 path;
     terminal found by pointer doubling."""
     nodes, edges = d8_graph(raster, cfg, tile_size)
-    nxt = (
-        nodes.join(edges.select(F.col("a").alias("id"), "b"), "id", "left")
-        .select("id", F.coalesce("b", F.col("id")).alias("nxt"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(32):
-        hop = nxt.alias("x").join(
-            nxt.alias("y").select(F.col("y.id").alias("nid"), F.col("y.nxt").alias("n2")),
-            F.col("x.nxt") == F.col("nid"),
-        ).select(F.col("x.id").alias("id"), F.col("n2").alias("nxt"))
-        changed = (
-            hop.alias("n").join(nxt.alias("o"), "id")
-            .where(F.col("n.nxt") != F.col("o.nxt")).limit(1).count()
-        )
-        nxt = hop.localCheckpoint(eager=True)
-        if changed == 0:
-            break
+    nxt = d8_terminal("elev_above_pit", nodes, edges, cfg)
     z = raster.select(
         (F.col("row") * cfg.cols + F.col("col")).alias("id"), F.col("value").alias("z")
     )
@@ -337,7 +322,8 @@ def average_upslope_flowpath_length(
     cur = nodes.select(
         "id", F.lit(0.0).alias("nsum"), F.lit(1.0).alias("cnt")
     ).localCheckpoint(eager=True)
-    for _ in range(max_rounds):
+
+    def step(cur):
         up = (
             edges.join(cur, edges.a == cur.id)
             .groupBy("b")
@@ -346,7 +332,7 @@ def average_upslope_flowpath_length(
                 F.sum("cnt").alias("c"),
             )
         )
-        nxt = (
+        return (
             nodes.select("id")
             .join(up.withColumnRenamed("b", "id"), "id", "left")
             .select(
@@ -354,18 +340,11 @@ def average_upslope_flowpath_length(
                 F.coalesce("s", F.lit(0.0)).alias("nsum"),
                 (F.lit(1.0) + F.coalesce("c", F.lit(0.0))).alias("cnt"),
             )
-            .localCheckpoint(eager=True)
         )
-        changed = (
-            nxt.alias("n").join(cur.alias("o"), "id")
-            .where(
-                (F.col("n.nsum") != F.col("o.nsum")) | (F.col("n.cnt") != F.col("o.cnt"))
-            )
-            .limit(1).count()
-        )
-        cur = nxt
-        if changed == 0:
-            break
+
+    cur = fixpoint(
+        "average_upslope_flowpath_length", cur, step, unchanged("id", "nsum", "cnt"), max_rounds
+    )
     return nodes.join(cur, "id").select(
         "row",
         "col",

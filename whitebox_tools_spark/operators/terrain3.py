@@ -16,6 +16,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from whitebox_tools_spark.operators.fixpoint import pointer_reach
 from whitebox_tools_spark.operators.focal import focal_apply, horn_fxfy
 from whitebox_tools_spark.operators.gridding import GridConfig
 
@@ -366,11 +367,9 @@ def long_profile_from_points(
     with its along-path distance and elevation. Pointer-doubling over the
     functional successor graph (log2(max_steps) rounds, distances summed
     through the jump table) — no O(path-length) driver loop."""
-    import math as _math
-
     from whitebox_tools_spark.operators.hydro import D8_DX, D8_DY
 
-    diag = _math.sqrt(cfg.res_x * cfg.res_x + cfg.res_y * cfg.res_y)
+    diag = math.sqrt(cfg.res_x * cfg.res_x + cfg.res_y * cfg.res_y)
     lens = [diag, cfg.res_x, diag, cfg.res_y, diag, cfg.res_x, diag, cfg.res_y]
     dx = F.array(*[F.lit(v) for v in D8_DX])
     dy = F.array(*[F.lit(v) for v in D8_DY])
@@ -393,42 +392,22 @@ def long_profile_from_points(
         .select(
             "id",
             F.coalesce("nxt", F.col("id")).alias("nxt"),
-            F.coalesce("len", F.lit(0.0)).alias("len"),
+            F.coalesce("len", F.lit(0.0)).alias("dist"),
         )
         .localCheckpoint(eager=True)
     )
-    sid = (F.col("row") * cfg.cols + F.col("col")).alias("seed")
-    reach = seeds.select(sid, (F.col("row") * cfg.cols + F.col("col")).alias("id"),
-                         F.lit(0.0).alias("dist")).distinct().localCheckpoint(eager=True)
-    jump = succ
-    rounds = max(1, math.ceil(math.log2(max_steps)))
-    prev_n = reach.count()
-    for k in range(rounds):
-        stepped = (
-            reach.join(jump, "id")
-            .select("seed", F.col("nxt").alias("id"), (F.col("dist") + F.col("len")).alias("dist"))
-        )
-        reach = reach.unionByName(stepped).distinct().localCheckpoint(eager=True)
-        n = reach.count()
-        if n == prev_n:
-            break
-        prev_n = n
-        if k < rounds - 1:
-            jx = jump.select(F.col("id").alias("jid"), F.col("nxt").alias("mid"), F.col("len").alias("l1"))
-            jy = jump.select(F.col("id").alias("mid"), F.col("nxt").alias("jnxt"), F.col("len").alias("l2"))
-            jump = (
-                jx.join(jy, "mid")
-                .select(F.col("jid").alias("id"), F.col("jnxt").alias("nxt"),
-                        (F.col("l1") + F.col("l2")).alias("len"))
-                .localCheckpoint(eager=True)
-            )
-    zmap = z.select((F.col("row") * cfg.cols + F.col("col")).alias("id"), F.col("value").alias("z"))
+    sid = F.col("row") * cfg.cols + F.col("col")
+    start = seeds.select(sid.alias("src"), sid.alias("cur"), F.lit(0.0).alias("dist"))
+    reach = pointer_reach(
+        "long_profile_from_points", start.distinct(), succ, max_steps, carry="dist"
+    )
+    zmap = z.select(sid.alias("cur"), F.col("value").alias("z"))
     return (
-        reach.join(zmap, "id")
+        reach.join(zmap, "cur")
         .select(
-            "seed",
-            (F.col("id") / cfg.cols).cast("long").alias("cell_row"),
-            F.pmod("id", F.lit(cfg.cols)).alias("cell_col"),
+            F.col("src").alias("seed"),
+            (F.col("cur") / cfg.cols).cast("long").alias("cell_row"),
+            F.pmod("cur", F.lit(cfg.cols)).alias("cell_col"),
             "dist", "z",
         )
     )
